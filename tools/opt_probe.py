@@ -35,6 +35,7 @@ def main() -> None:
                     help="time df.count() (bench methodology) instead of the noop sink")
     args = ap.parse_args()
 
+    from bench import _persistent_ids, _unpersist_new
     from zenodb_spark import queries as Q
     from zenodb_spark.session import get_spark
 
@@ -50,13 +51,7 @@ def main() -> None:
     Q._engine_db(spark, args.sf_dir)
     for t in Q._ENGINE_CACHE[args.sf_dir].tables.values():
         t.state_df().count()
-    protected = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    def unpersist_new():
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            if rid not in protected:
-                jmap.get(rid).unpersist(False)
+    protected = _persistent_ids(sc)
 
     results = {}
     for name in names:
@@ -75,7 +70,7 @@ def main() -> None:
             fn(spark, warm_dir).count()
         except Exception as e:
             print(f"# warm {name} failed: {e}", file=sys.stderr)
-        unpersist_new()
+        _unpersist_new(sc, protected)
         best = None
         for p in range(args.passes):
             sc.setJobDescription(f"{name} pass{p}")
@@ -87,7 +82,7 @@ def main() -> None:
                 df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-            unpersist_new()
+            _unpersist_new(sc, protected)
             print(f"# {name} pass{p}: {dt:.3f}s", file=sys.stderr)
             sc.setJobDescription(None)
         results[name] = round(best, 3)

@@ -423,25 +423,35 @@ class Table:
         column (row-group stats within a day)."""
         if not self._parts:
             raise ValueError(f"table {self.tdef.name} has no data")
-        cutoff: int | None = None
-        if self.tdef.retention is not None:
-            cutoff = int((self.db.now() - self.tdef.retention) // self.resolution * self.resolution)
         cached = self.db._scan_cache.get(self.tdef.name)
-        if cached is not None:
-            # coalesced-scan path (DB.query_many): every concurrent query
-            # reads the one persisted merged state; time filters apply to
-            # the bucket column on top of the shared cache (directory
-            # pruning is traded for scanning once instead of N times —
-            # the reference's iteration-coalescing trade, table.go:398)
-            out = cached
-            for lo in (cutoff, asof):
-                if lo is not None:
-                    out = out.filter(F.col(BUCKET_COL) >= F.lit(lo))
-            if until is not None:
-                out = out.filter(F.col(BUCKET_COL) < F.lit(until))
-            return out
-        parts = []
-        for p in self._parts:
+        if cached is None:
+            return self._union_parts(self._parts, asof, until)
+        # coalesced-scan path (DB.query_many): every concurrent query
+        # reads the one persisted merged state; time filters apply to
+        # the bucket column on top of the shared cache (directory
+        # pruning is traded for scanning once instead of N times —
+        # the reference's iteration-coalescing trade, table.go:398)
+        out = cached
+        for lo in (self._retention_cutoff(), asof):
+            if lo is not None:
+                out = out.filter(F.col(BUCKET_COL) >= F.lit(lo))
+        if until is not None:
+            out = out.filter(F.col(BUCKET_COL) < F.lit(until))
+        return out
+
+    def _retention_cutoff(self) -> int | None:
+        if self.tdef.retention is None:
+            return None
+        return int((self.db.now() - self.tdef.retention) // self.resolution * self.resolution)
+
+    def _union_parts(
+        self, parts: list[DataFrame], asof: int | None = None, until: int | None = None
+    ) -> DataFrame:
+        """Union of ``parts`` with retention and [asof, until) applied to
+        the day partition and the bucket column."""
+        cutoff = self._retention_cutoff()
+        pruned = []
+        for p in parts:
             if DAY_COL in p.columns:
                 if asof is not None:
                     p = p.filter(F.col(DAY_COL) >= F.lit(asof // DAY_SEC))
@@ -450,9 +460,9 @@ class Table:
                 if cutoff is not None:
                     p = p.filter(F.col(DAY_COL) >= F.lit(cutoff // DAY_SEC))
                 p = p.drop(DAY_COL)
-            parts.append(p)
-        out = parts[0]
-        for p in parts[1:]:
+            pruned.append(p)
+        out = pruned[0]
+        for p in pruned[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
         if cutoff is not None:
             out = out.filter(F.col(BUCKET_COL) >= F.lit(cutoff))
@@ -502,29 +512,32 @@ class Table:
             return
         if len(self._parts) == 1 and self._materialized:
             return
+        # Fold a snapshot: parts that ingest() appends during the fold stay
+        # pending behind the merged part, and query_many's registered scan
+        # snapshot (what state_df() returns while it lowers) is never folded
+        # in place of the live parts.
         old_parts = list(self._parts)
-        if len(self._parts) > 1:
+        n = len(old_parts)
+        if n > 1:
             merged = merge_states(
-                self.state_df(),
+                self._union_parts(old_parts),
                 self.registry,
                 [(d, F.col(d)) for d in self.dims or []],
                 self.resolution,
                 self.resolution,
             )
         else:
-            merged = self._parts[0]
+            merged = old_parts[0]
         if self.db.workdir:
             # consolidated store lives under main/ — sibling stream_part=N
             # dirs keep their own partition discovery separate
             path = f"{self.db.workdir}/{self.tdef.name}/main"
             merged = self._write_store(merged, path)
-            import os
             import shutil
 
-            base = f"{self.db.workdir}/{self.tdef.name}"
-            for sub in os.listdir(base):
-                if sub.startswith("stream_part="):
-                    shutil.rmtree(f"{base}/{sub}", ignore_errors=True)
+            for part_dir, i in self._stream_seen.items():
+                if i is not None and i < n:  # folded into main just now
+                    shutil.rmtree(part_dir, ignore_errors=True)
         else:
             from pyspark import StorageLevel
 
@@ -543,12 +556,18 @@ class Table:
                     p.unpersist(False)
                 except Exception:
                     pass
-        self._parts = [merged]
+        # one in-place slice store (atomic under the GIL): a part ingest()
+        # appends meanwhile is kept behind the merged one
+        self._parts[:n] = [merged]
         # folded stream parts stay in the ledger (value None) so a late
         # checkpoint replay of an already-folded batch is skipped, not
-        # re-ingested
-        self._stream_seen = {k: None for k in self._stream_seen}
-        self._materialized = True
+        # re-ingested; parts appended during the fold shift down behind
+        # the merged part
+        self._stream_seen = {
+            k: None if i is None or i < n else i - n + 1
+            for k, i in self._stream_seen.items()
+        }
+        self._materialized = len(self._parts) == 1
         self.db._invalidate_plans()
 
 
@@ -867,17 +886,6 @@ class DB:
         for df in self._coalesced_scans:
             df.unpersist(False)
         self._coalesced_scans.clear()
-
-    def explain(self, sql: str, mode: str = "formatted") -> str:
-        """Formatted physical plan of a dialect query — the reference logs
-        its operator tree via FormatSource (core/format.go:8-29,
-        query.go:50); here Catalyst's plan IS the operator tree, which is
-        strictly more informative (exchanges, pushed filters, codegen
-        spans)."""
-        df = self.plan(parse(sql))
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), mode
-        )
 
     _PLAN_CACHE_MAX = 64
 

@@ -108,6 +108,24 @@ def shingle_arrays(
     return df.select(F.col(id_col).alias("doc"), arr.alias("shingles"))
 
 
+def _shared_shingle_arrays(
+    df: DataFrame, text_col: str, id_col: str, n: int, fingerprint: bool = True
+) -> DataFrame:
+    """:func:`shingle_arrays` behind a lazy ``localCheckpoint``: the arrays
+    are computed once, by the first action over them, and every later
+    consumer reads the blocks.
+
+    localCheckpoint, NOT persist: a persist on a frame returned lazily can
+    never be unpersisted by the operator, so long driver sessions leak
+    CacheManager entries; checkpoint blocks are freed by the ContextCleaner
+    once the frame is garbage collected (same fix as operators/prefix.py,
+    round-4 ADVICE item 4). Callers must not re-filter on
+    ``size("shingles")`` (see shingle_arrays)."""
+    return shingle_arrays(df, text_col, id_col, n, fingerprint).localCheckpoint(
+        eager=False
+    )
+
+
 def shingle_expr(text_col: Column | str, n: int) -> Column:
     """The word n-gram shingle ARRAY expression (strings, in-text order,
     pre-distinct): zip of n pre-shifted token-array slices + positional
@@ -223,18 +241,7 @@ def ngram_jaccard_pairs_prefix(
     WWW'08).
     """
     if arrays is None:
-        arrays = (
-            shingle_arrays(df, text_col, id_col, n, fingerprint=True)
-            # no size-filter here: shingle_arrays guarantees nonempty arrays,
-            # and re-filtering would push the shingle expr below the exchange.
-            # localCheckpoint(eager=False), NOT persist: a persist on a frame
-            # returned lazily can never be unpersisted by the operator, so
-            # long driver sessions leak CacheManager entries; checkpoint
-            # blocks are freed by the ContextCleaner once the frame is
-            # garbage collected (same fix as operators/prefix.py, round-4
-            # ADVICE item 4).
-            .localCheckpoint(eager=False)
-        )
+        arrays = _shared_shingle_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )
@@ -595,11 +602,7 @@ def ngram_jaccard_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
-        arrays = shingle_arrays(
-            df, text_col, id_col, n, fingerprint=True
-        ).localCheckpoint(eager=False)
+        arrays = _shared_shingle_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -643,11 +646,7 @@ def containment_pairs_pairtoken(
     if K is None or small_max is None:
         raise ValueError("pairtoken requires planner-provided K and small_max")
     if arrays is None:
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
-        arrays = shingle_arrays(
-            df, text_col, id_col, n, fingerprint=True
-        ).localCheckpoint(eager=False)
+        arrays = _shared_shingle_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("s")
     )
@@ -808,9 +807,7 @@ def _plan_exact_join(
     # arrays, so one job both tokenizes the corpus into checkpoint blocks
     # and returns the size quantile (an eager checkpoint + separate
     # quantile action would scan the corpus twice)
-    arrays = shingle_arrays(df, text_col, id_col, n, fingerprint=True).localCheckpoint(
-        eager=False
-    )
+    arrays = _shared_shingle_arrays(df, text_col, id_col, n)
     quant = arrays.select(F.size("shingles").alias("sz")).approxQuantile(
         "sz", [0.05], 0.01
     )
@@ -1068,16 +1065,10 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     # the shingle set feeds three plan branches (signatures + both sides of
-    # the verification join); persist the per-doc ARRAYS once (1 row/doc —
-    # far smaller than the exploded postings), memory-and-disk so it spills
-    # rather than recomputing the tokenization 3× at scale
-    arrays = (
-        shingle_arrays(df, text_col, id_col, n)
-        # no size-filter here: shingle_arrays guarantees nonempty arrays.
-        # localCheckpoint, not persist — leak-free shared materialization
-        # (see ngram_jaccard_pairs_prefix)
-        .localCheckpoint(eager=False)
-    )
+    # the verification join); materialize the per-doc ARRAYS once (1 row/doc
+    # — far smaller than the exploded postings) rather than recomputing the
+    # tokenization 3× at scale
+    arrays = _shared_shingle_arrays(df, text_col, id_col, n, fingerprint=False)
     # signatures straight off the array, NO groupBy shuffle. Hash family is
     # Carter–Wegman over ONE md5 per shingle: h_i(s) = (h1(s) + i·h2(s))
     # mod P with h1/h2 = two 32-bit halves of md5(s) — pairwise-independent,
@@ -1702,14 +1693,7 @@ def containment_pairs(
         )
 
     if arrays is None:
-        arrays = (
-            shingle_arrays(df, text_col, id_col, n, fingerprint=True)
-            # no size-filter here: shingle_arrays guarantees nonempty arrays,
-            # and re-filtering would push the shingle expr below the exchange.
-            # localCheckpoint, not persist — leak-free shared materialization
-            # (see ngram_jaccard_pairs_prefix)
-            .localCheckpoint(eager=False)
-        )
+        arrays = _shared_shingle_arrays(df, text_col, id_col, n)
     sh = arrays.select(
         "doc", F.size("shingles").alias("sz"), F.explode("shingles").alias("shingle")
     )

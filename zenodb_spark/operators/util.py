@@ -62,25 +62,30 @@ def lit_mat(rows) -> Column:
     )
 
 
-def _scan_file_size(spark, uri: str) -> int:
-    """Byte size of one scan file (driver-side, no job). Local paths are
-    stat'ed directly; anything else goes through the Hadoop FileSystem of
-    its own scheme. Unknown/unreadable files count as 0 — the caller's
-    threshold errs toward NOT materializing, which is only ever a local
-    fixed-cost question (see maybe_checkpoint)."""
-    p = urlparse(uri)
-    if p.scheme in ("", "file"):
-        try:
-            return os.path.getsize(unquote(p.path))
-        except OSError:
-            return 0
+def _scan_files(df: DataFrame) -> list[str] | None:
+    """URIs of the frame's scan files (``inputFiles``: analysis-only, no
+    job — NOT ``df.rdd``, which forces plan materialization and hides the
+    frame from AQE), or None when the listing fails. A frame above a
+    checkpoint or built in memory lists no files."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(uri)
+        return list(df.inputFiles())
+    except Exception:
+        return None
+
+
+def _scan_file_size(spark, uri: str) -> int | None:
+    """Byte size of one scan file (driver-side, no job), or None when it
+    cannot be stat'ed. Local paths are stat'ed directly; anything else goes
+    through the Hadoop FileSystem of its own scheme."""
+    p = urlparse(uri)
+    try:
+        if p.scheme in ("", "file"):
+            return os.path.getsize(unquote(p.path))
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(uri)
         fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
         return fs.getFileStatus(jpath).getLen()
     except Exception:
-        return 0
+        return None
 
 
 # Below this input size, recomputing a shared subtree once per consumer is
@@ -91,65 +96,49 @@ def _scan_file_size(spark, uri: str) -> int:
 # count action). The break-even is a LOCAL fixed-cost question, independent
 # of cluster size — at any real corpus size the gate fires and the
 # round-6 one-pass shape (N corpus scans -> 1) is preserved unchanged.
-_CKPT_MIN_BYTES_DEFAULT = 3 * 1024 * 1024
+_SHARE_MIN_BYTES = 3 * 1024 * 1024
 # At or above this many scan files the input is assumed big without
 # stat'ing each file: checkpointing data this size is at worst a small
 # fixed cost, while per-file driver-side stats are not.
-_CKPT_MANY_FILES = 64
+_SHARE_MANY_FILES = 64
 
 
-def checkpoint_worthwhile(df: DataFrame) -> bool:
-    """True when ``df``'s scan input is big enough that materializing a
-    shared subtree derived from it beats re-scanning once per consumer.
+def share(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
+    """Materialize ``df`` — a subtree several consumers read — with an
+    eager ``localCheckpoint`` unless its input is provably small.
 
-    Input size is the summed byte size of the frame's scan files
-    (``inputFiles`` — analysis-only, no job, the same probe ``spread``
-    uses), with early exit once the threshold is crossed. Frames with no
-    scan files (in-memory test frames, already-checkpointed parents)
-    report False: callers whose subtree sits ABOVE another checkpoint
-    must gate on the original SOURCE frame, not the derived one.
+    Catalyst cannot stage-reuse subtrees whose consumers prune different
+    columns, so each consumer re-scans and recomputes the subtree; one
+    materialization job replaces those N passes (guide §2.4 / §5). Below
+    ``_SHARE_MIN_BYTES`` of scan input the re-scans are cheaper, and
+    ``df`` is returned untouched. Consumers see identical rows either way.
 
-    ``SPARK_GRAFT_CHECKPOINT_MIN_BYTES`` overrides the threshold
-    (<= 0 forces checkpointing unconditionally — used by tests and by
-    deployments whose scan cost per byte is unusually high)."""
-    try:
-        min_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT_MIN_BYTES", _CKPT_MIN_BYTES_DEFAULT
-            )
-        )
-    except ValueError:
-        min_bytes = _CKPT_MIN_BYTES_DEFAULT
-    if min_bytes <= 0:
-        return True
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if len(files) >= _CKPT_MANY_FILES:
-        return True
+    The size is the summed byte size of ``source``'s scan files
+    (default ``df``). Pass the raw scan as ``source`` when ``df`` sits above
+    another checkpoint, whose LogicalRDD lists no files. The policy fails
+    toward materializing: a source with ``_SHARE_MANY_FILES`` or more
+    files, no files at all, or a file listing or stat that fails counts as
+    big — wrongly skipping costs N re-scans at scale, wrongly
+    materializing costs one small job."""
+    if _small_input(df if source is None else source):
+        return df
+    return df.localCheckpoint(eager=True)
+
+
+def _small_input(df: DataFrame) -> bool:
+    """:func:`share`'s skip test; stops stat'ing once the sum crosses."""
+    files = _scan_files(df)
+    if not files or len(files) >= _SHARE_MANY_FILES:
+        return False
     total = 0
     for uri in files:
-        total += _scan_file_size(df.sparkSession, uri)
-        if total >= min_bytes:
-            return True
-    return False
-
-
-def maybe_checkpoint(df: DataFrame, eager: bool = True, gate_df: DataFrame | None = None) -> DataFrame:
-    """Size-adaptive ``localCheckpoint``: materialize a shared
-    multi-consumer subtree only when its input scan is big enough that
-    re-scanning it once per consumer costs more than one materialization
-    job (guide §2.4 / §5; the round-7 fix for round 6's bench-scale
-    checkpoint regressions). Semantically a no-op either way — consumers
-    see identical rows whether the subtree is materialized or recomputed.
-
-    ``gate_df`` sizes the decision on a different frame (the raw source)
-    when ``df`` itself sits above another checkpoint, whose LogicalRDD
-    reports no input files."""
-    if checkpoint_worthwhile(df if gate_df is None else gate_df):
-        return df.localCheckpoint(eager=eager)
-    return df
+        size = _scan_file_size(df.sparkSession, uri)
+        if size is None:
+            return False
+        total += size
+        if total >= _SHARE_MIN_BYTES:
+            return False
+    return True
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -160,16 +149,11 @@ def spread(df: DataFrame) -> DataFrame:
     scan's partitioning.
 
     Under-partitioning is detected from the scan's file listing
-    (``inputFiles``), NOT ``df.rdd`` — converting to RDD lineage forces plan
-    materialization and hides the frame from AQE. A real corpus has ≥ cores
-    input files, so this is a no-op with no added shuffle at scale; a
-    single-file local read (or an in-memory test frame, which reports zero
-    input files) gets one explicit round-robin spread."""
+    (:func:`_scan_files`, the probe :func:`share` sizes with). A real
+    corpus has ≥ cores input files, so this is a no-op with no added
+    shuffle at scale; a single-file local read (or an in-memory test frame,
+    which reports zero input files) gets one explicit round-robin spread."""
     sc = df.sparkSession.sparkContext
-    try:
-        nfiles = len(df.inputFiles())
-    except Exception:
-        nfiles = 0
-    if nfiles < sc.defaultParallelism:
+    if len(_scan_files(df) or ()) < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df

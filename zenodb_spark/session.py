@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the engine.
 
 Scale notes (100 TB north star): every config here is chosen to survive a
-1000-executor cluster, not just local[32]:
+1000-executor cluster, not just one local box:
 
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting means
   we do not hand-tune ``spark.sql.shuffle.partitions`` per query.
@@ -19,7 +19,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _local_cpus() -> int:
+    """Local core count: ``SPARK_GRAFT_CPUS`` when set, else the machine's
+    own (a fixed fallback oversubscribes small boxes)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def get_spark(
@@ -29,13 +33,13 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _local_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
